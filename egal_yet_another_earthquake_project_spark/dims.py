@@ -2,10 +2,10 @@
 
 The reference buckets provinces into fault-line regions with a hardcoded
 membership-list UDF (``/root/reference/sparktoELKstream.py:56-74``) whose
-closure is re-pickled into every task. Here the same mapping is a 58-row
-broadcast-joined dimension table — Catalyst plans a BroadcastHashJoin, the
-lookup stays JVM-side, and at 100 TB the dim ships once per executor
-instead of once per task.
+closure is re-pickled into every task. Here the same mapping is plain data:
+``operators/enrich.py:with_fault_line`` turns it into one column
+expression, and :func:`province_region_rows` lists it as (province, region)
+pairs for checks outside the engine.
 
 Data transcribed from the reference's three membership lists (15+23+21
 provinces; 'Osmaniye' appears twice in the Doğu list there — deduped here,
@@ -13,10 +13,6 @@ per FIXTURES.md §5).
 """
 
 from __future__ import annotations
-
-from pyspark.sql import DataFrame, SparkSession
-
-from egal_yet_another_earthquake_project_spark.schemas import PROVINCE_DIM
 
 DOGU_ANADOLU = "Doğu Anadolu"
 KUZEY_ANADOLU = "Kuzey Anadolu"
@@ -52,7 +48,3 @@ def province_region_rows() -> list[tuple[str, str]]:
         for province in provinces
     ]
 
-
-def province_region_dim(spark: SparkSession) -> DataFrame:
-    """The fault-line dimension as a (tiny, always-broadcastable) DataFrame."""
-    return spark.createDataFrame(province_region_rows(), PROVINCE_DIM)

@@ -6,7 +6,6 @@ tuples (:105) — which still leaves near-duplicate docs when AFAD re-sends an
 event with ``isEventUpdate=true`` (SURVEY ST5). Engine semantics:
 
 * :func:`distinct_rows` — the reference's literal behavior, one pass.
-* :func:`dedup_by_key` — keep exactly one row per business key.
 * :func:`latest_by_key` — last-update-wins upsert semantics (what the
   reference's ES sink needed), via ``max_by``-style window, shuffle-once.
 """
@@ -22,12 +21,6 @@ from pyspark.sql import functions as F
 def distinct_rows(df: DataFrame) -> DataFrame:
     """Full-row dedup (A1+A2 collapse into one shuffle)."""
     return df.distinct()
-
-
-def dedup_by_key(df: DataFrame, keys: Sequence[str]) -> DataFrame:
-    """One arbitrary row per key — ``dropDuplicates``: hash-partitions by
-    ``keys``, map-side partial dedup first, so it scales linearly."""
-    return df.dropDuplicates(list(keys))
 
 
 def latest_by_key(

@@ -1,45 +1,27 @@
 """Silver enrichment: fault-line region bucketing.
 
 The reference hardcodes three province membership lists in a Python
-function applied per row inside an RDD map
-(/root/reference/sparktoELKstream.py:56-74,103). Two Spark-first forms are
-provided; both keep the lookup JVM-side:
-
-* :func:`with_fault_line` — broadcast hash join against the 58-row dim
-  (preferred: at 100 TB the dim ships once per executor, the join is
-  map-side, and Catalyst can still prune/push around it).
-* :func:`with_fault_line_expr` — a ``when(col.isin(...))`` chain (zero
-  join, useful inside streaming stages where an extra join is noise).
+function applied per row inside an RDD map (``sparktoELKstream.py:56-74,103``
+there). Here the same lists become one ``when(col.isin(...))`` chain: a pure
+column expression, so the lookup stays JVM-side, needs no join or dimension
+frame, and runs unchanged in batch and streaming plans.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from egal_yet_another_earthquake_project_spark.dims import _PROVINCES, province_region_dim
+from egal_yet_another_earthquake_project_spark.dims import _PROVINCES
 
 
 def with_fault_line(df: DataFrame, province_col: str = "province") -> DataFrame:
-    """Attach ``fault_line`` via broadcast join; unlisted provinces get ``''``
-    (the reference's else-branch, /root/reference/sparktoELKstream.py:69-70)."""
-    dim = province_region_dim(df.sparkSession)
-    if province_col != "province":
-        dim = dim.withColumnRenamed("province", province_col)
-    joined = df.join(F.broadcast(dim), on=province_col, how="left")
-    return joined.withColumn("fault_line", F.coalesce("fault_line", F.lit("")))
-
-
-def fault_line_expr(province: Column | str) -> Column:
-    """Pure-expression variant of the bucketing (F6)."""
-    c = F.col(province) if isinstance(province, str) else province
+    """Attach ``fault_line`` (F6); unlisted and null provinces get ``''``
+    (the reference's else-branch, ``sparktoELKstream.py:69-70``)."""
+    c = F.col(province_col)
     expr = F.lit("")
     # Build the when-chain in reverse so the first region wins, matching the
     # reference's if/elif order.
     for region, provinces in reversed(list(_PROVINCES.items())):
         expr = F.when(c.isin(*provinces), F.lit(region)).otherwise(expr)
-    return expr
-
-
-def with_fault_line_expr(df: DataFrame, province_col: str = "province") -> DataFrame:
-    return df.withColumn("fault_line", fault_line_expr(province_col))
+    return df.withColumn("fault_line", expr)

@@ -6,8 +6,9 @@ One Catalyst plan per output; the silver frame is cached once instead of
 re-parsed per action (the reference re-executes the full parse for every
 count/collect — SURVEY §3 E3).
 
-Streaming (E1): the same silver transform applied via the streaming module
-(streaming/silver.py parsed_stream shares these functions verbatim).
+Streaming (E1): the same silver record — ``operators.parse.silver_events``
+is the only definition, and streaming/silver.py ``parsed_stream`` calls it
+on the stream exactly as :func:`bronze_to_silver` does here.
 """
 
 from __future__ import annotations
@@ -21,11 +22,10 @@ from egal_yet_another_earthquake_project_spark.operators.analytics import (
     threshold_counts_by_group,
 )
 from egal_yet_another_earthquake_project_spark.operators.dedup import latest_by_key
-from egal_yet_another_earthquake_project_spark.operators.enrich import with_fault_line
 from egal_yet_another_earthquake_project_spark.operators.parse import (
     decode_envelope,
     parse_events_raw,
-    typed_events,
+    silver_events,
 )
 from egal_yet_another_earthquake_project_spark.operators.stats import (
     describe_numeric,
@@ -40,14 +40,10 @@ def bronze_to_silver(envelopes: DataFrame) -> DataFrame:
     """Kafka envelope rows → typed, enriched, exactly-one-row-per-event
     silver frame. Last-update-wins on (eventID): the AFAD re-send carries
     isEventUpdate/lastUpdateDate (ST5) — the reference's full-row distinct
-    kept both versions; here the newest wins deterministically."""
-    typed = with_fault_line(typed_events(parse_events_raw(decode_envelope(envelopes))))
-    # Unparseable payloads (non-JSON, or JSON without an id) surface as
-    # null eventIDs after from_json; they carry no upsertable identity and
-    # are dropped here rather than shipped as a merged null-id document.
-    valid = typed.filter(typed.eventID.isNotNull())
+    kept both versions; here the newest wins deterministically. Payloads
+    without a usable eventID are dropped by ``silver_events``."""
     return latest_by_key(
-        valid,
+        silver_events(parse_events_raw(decode_envelope(envelopes))),
         keys=["eventID"],
         order_col="lastUpdateDate",
         tiebreak=["date"],

@@ -83,15 +83,6 @@ KAFKA_ENVELOPE = T.StructType(
     ]
 )
 
-# Province → fault-line dimension (replaces the reference's hardcoded
-# group_city UDF, /root/reference/sparktoELKstream.py:56-74).
-PROVINCE_DIM = T.StructType(
-    [
-        T.StructField("province", T.StringType(), False),
-        T.StructField("fault_line", T.StringType(), False),
-    ]
-)
-
 # Driver test tables (/root/testdata/sf*/, see TESTDATA.md). Explicit schemas
 # let streaming file sources and strict readers skip inference.
 EVENTS = T.StructType(

@@ -27,6 +27,9 @@ from pyspark.sql import DataFrame, Row
 #: transport(url, payload_lines) -> None; payload is ndjson bulk body.
 Transport = Callable[[str, str], None]
 
+#: Documents per bulk POST, per partition.
+BULK_DOCS = 1000
+
 
 def http_transport(url: str, payload: str) -> None:
     """Minimal stdlib bulk POST (no external ES client dependency)."""
@@ -42,15 +45,13 @@ def http_transport(url: str, payload: str) -> None:
         resp.read()
 
 
-def bulk_actions(rows: Iterator[Row], index: str, id_col: str | None) -> Iterator[str]:
+def bulk_actions(rows: Iterator[Row], index: str, id_col: str) -> Iterator[str]:
     """Rows → ES bulk ndjson action/document line pairs (the executor-side
     replacement for the reference's driver-side doc_generator,
     /root/reference/sparktoELKstream.py:33-40)."""
     for row in rows:
         doc: dict[str, Any] = row.asDict(recursive=True)
-        meta: dict[str, Any] = {"index": {"_index": index}}
-        if id_col is not None:
-            meta["index"]["_id"] = str(doc[id_col])
+        meta = {"index": {"_index": index, "_id": str(doc[id_col])}}
         yield json.dumps(meta, default=str)
         yield json.dumps(doc, default=str)
 
@@ -59,11 +60,10 @@ def write_to_es(
     df: DataFrame,
     index: str,
     es_url: str = "http://localhost:9200",
-    id_col: str | None = "eventID",
-    batch_docs: int = 1000,
+    id_col: str = "eventID",
     transport: Transport = http_transport,
 ) -> None:
-    """Bulk-index a DataFrame: one POST per ``batch_docs`` docs per
+    """Bulk-index a DataFrame: one POST per :data:`BULK_DOCS` docs per
     partition, entirely on executors."""
     url = f"{es_url.rstrip('/')}/_bulk"
 
@@ -71,7 +71,7 @@ def write_to_es(
         lines: list[str] = []
         for line in bulk_actions(rows, index, id_col):
             lines.append(line)
-            if len(lines) >= batch_docs * 2:
+            if len(lines) >= BULK_DOCS * 2:
                 transport(url, "\n".join(lines) + "\n")
                 lines = []
         if lines:
@@ -83,7 +83,7 @@ def write_to_es(
 def streaming_es_sink(
     index: str,
     es_url: str = "http://localhost:9200",
-    id_col: str | None = "eventID",
+    id_col: str = "eventID",
     transport: Transport = http_transport,
 ) -> Callable[[DataFrame, int], None]:
     """``foreachBatch`` function: exactly-once-effective because the upsert

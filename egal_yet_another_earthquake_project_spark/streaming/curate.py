@@ -101,6 +101,7 @@ from egal_yet_another_earthquake_project_spark.llm import clusters as lcl
 from egal_yet_another_earthquake_project_spark.llm import dedup as ldd
 from egal_yet_another_earthquake_project_spark.llm import packing as lpack
 from egal_yet_another_earthquake_project_spark.llm import text as ltx
+from egal_yet_another_earthquake_project_spark.sources.files import stream_parquet_dir
 from egal_yet_another_earthquake_project_spark.streaming.ingest import (
     stream_new_docs,
 )
@@ -165,10 +166,7 @@ def _admit_hop(
     stage), + the exact-duplicate gate (``stream_new_docs``:
     corpus-fingerprint anti-join, then watermark-bounded in-stream fp
     dedup)."""
-    reader = spark.readStream.format("parquet").schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    incoming = reader.load(source_dir)
+    incoming = stream_parquet_dir(spark, source_dir, schema, max_files_per_trigger)
 
     gated = ltx.text_profile(incoming, text_col).filter(
         F.col("quality") >= min_quality

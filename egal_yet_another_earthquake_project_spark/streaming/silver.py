@@ -7,8 +7,8 @@ and its only defense is a stateless full-row ``distinct()`` per micro-batch
 survive, and AFAD's re-sent updates (isEventUpdate=true) become extra docs.
 Engine semantics:
 
-* :func:`parsed_stream` — the bronze→silver transform, shared verbatim
-  between batch and streaming (same DataFrame functions).
+* :func:`parsed_stream` — the bronze→silver transform: the same
+  ``operators.parse.silver_events`` call the batch pipeline makes.
 * :func:`dedup_stream` — cross-batch exactly-once per eventID via
   ``dropDuplicatesWithinWatermark``: state is bounded by the watermark
   (sized to the reference's 7-day re-poll horizon, ST3) instead of growing
@@ -22,13 +22,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from egal_yet_another_earthquake_project_spark.operators.enrich import (
-    with_fault_line_expr,
-)
 from egal_yet_another_earthquake_project_spark.operators.parse import (
     decode_envelope,
     parse_events_raw,
-    typed_events,
+    quarantine_split,
+    silver_events,
 )
 
 #: Watermark horizon for event dedup state — the weekly re-poll window
@@ -39,7 +37,7 @@ DEDUP_WATERMARK = "7 days"
 def parsed_stream(envelope: DataFrame) -> DataFrame:
     """Kafka envelope stream → typed, enriched silver stream. Pure column
     transforms — identical code path for batch backfill and streaming."""
-    return with_fault_line_expr(typed_events(parse_events_raw(decode_envelope(envelope))))
+    return silver_events(parse_events_raw(decode_envelope(envelope)))
 
 
 def dedup_stream(
@@ -135,20 +133,12 @@ def silver_with_quarantine(
     see the ``_batch_id`` column; drop it if lineage isn't wanted.
     Returns the started query.
     """
-    from egal_yet_another_earthquake_project_spark.operators.parse import (
-        decode_envelope,
-        quarantine_split,
-        typed_events,
-    )
-    from egal_yet_another_earthquake_project_spark.operators.enrich import (
-        with_fault_line_expr,
-    )
 
     def _sink(batch: DataFrame, batch_id: int) -> None:
         decoded = decode_envelope(batch)
         ok, bad = quarantine_split(decoded)
         for frame, path in (
-            (with_fault_line_expr(typed_events(ok)), silver_path),
+            (silver_events(ok), silver_path),
             (bad, quarantine_path),
         ):
             (

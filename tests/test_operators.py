@@ -70,20 +70,16 @@ def test_parse_bad_date_defaults(spark):
     assert typed.collect()[0].date.year == 2010  # F11 default
 
 
-def test_fault_line_join_and_expr_agree(spark):
-    provinces = [p for p, _ in province_region_rows()] + ["Rize", "Kilis"]
+def test_fault_line_matches_province_region_rows(spark):
+    listed = province_region_rows()
+    provinces = [p for p, _ in listed] + ["Rize", "Kilis", None]
     df = spark.createDataFrame([(p,) for p in provinces], "province string")
-    joined = {
-        r.province: r.fault_line for r in enrich.with_fault_line(df).collect()
-    }
-    exprd = {
-        r.province: r.fault_line for r in enrich.with_fault_line_expr(df).collect()
-    }
-    assert joined == exprd
-    assert joined["Kahramanmaraş"] == DOGU_ANADOLU
-    assert joined["İstanbul"] == KUZEY_ANADOLU
-    assert joined["İzmir"] == BATI_ANADOLU
-    assert joined["Rize"] == ""  # unlisted → empty bucket (reference :69-70)
+    got = {r.province: r.fault_line for r in enrich.with_fault_line(df).collect()}
+    # unlisted and null provinces → empty bucket (reference :69-70)
+    assert got == {**dict(listed), "Rize": "", "Kilis": "", None: ""}
+    assert got["Kahramanmaraş"] == DOGU_ANADOLU
+    assert got["İstanbul"] == KUZEY_ANADOLU
+    assert got["İzmir"] == BATI_ANADOLU
 
 
 def test_reference_view_all_string(spark):
@@ -158,8 +154,9 @@ def test_range_join_matches_naive(spark):
 
 
 def test_quarantine_split_routes_malformed_payloads(spark):
-    """Valid docs parse; garbage and empty payloads land in quarantine
-    with the original payload intact (replayable) and a typed reason."""
+    """Valid docs parse; garbage, empty and id-less payloads land in
+    quarantine with the original payload intact (replayable) and a typed
+    reason."""
     from egal_yet_another_earthquake_project_spark.operators.parse import (
         quarantine_split,
     )
@@ -170,6 +167,7 @@ def test_quarantine_split_routes_malformed_payloads(spark):
         ("",),
         (None,),
         ('{"eventID": "2"}',),
+        ('{"province": "Izmir"}',),
     ]
     df = spark.createDataFrame(rows, "ascii_value string")
     ok, bad = quarantine_split(df)
@@ -179,6 +177,7 @@ def test_quarantine_split_routes_malformed_payloads(spark):
         ("not json at all {", "unparseable_json"),
         ("", "null_payload"),
         (None, "null_payload"),
+        ('{"province": "Izmir"}', "missing_event_id"),
     }
 
 

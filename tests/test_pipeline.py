@@ -4,7 +4,10 @@ reference analytics + ES documents out (SURVEY §3 lifecycle, done right)."""
 from __future__ import annotations
 
 from egal_yet_another_earthquake_project_spark import pipeline
-from egal_yet_another_earthquake_project_spark.schemas import KAFKA_ENVELOPE
+from egal_yet_another_earthquake_project_spark.schemas import (
+    EARTHQUAKE_TYPED,
+    KAFKA_ENVELOPE,
+)
 from egal_yet_another_earthquake_project_spark.testing import fixtures
 
 
@@ -18,6 +21,11 @@ def test_batch_pipeline_end_to_end(spark):
 
     shipped = []
     gold = pipeline.run_batch(env, es_writer=lambda df: shipped.append(df.count()))
+
+    # silver is the declared record, field for field (nullability aside)
+    assert [(f.name, f.dataType) for f in pipeline.bronze_to_silver(env).schema] == [
+        (f.name, f.dataType) for f in EARTHQUAKE_TYPED
+    ]
 
     silver_rows = gold.es_documents.collect()
     unique_ids = {e["eventID"] for e in events}

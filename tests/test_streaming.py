@@ -13,7 +13,11 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from egal_yet_another_earthquake_project_spark.schemas import EVENTS, KAFKA_ENVELOPE
+from egal_yet_another_earthquake_project_spark.schemas import (
+    EARTHQUAKE_TYPED,
+    EVENTS,
+    KAFKA_ENVELOPE,
+)
 from egal_yet_another_earthquake_project_spark.sinks.elasticsearch import write_to_es
 from egal_yet_another_earthquake_project_spark.sources.files import stream_parquet_dir
 from egal_yet_another_earthquake_project_spark.streaming.bronze import archive_stream
@@ -82,6 +86,10 @@ def test_silver_dedup_overlapping_polls(spark, tmp_path: Path):
 
     stream = stream_parquet_dir(spark, str(src), KAFKA_ENVELOPE)
     silver = dedup_stream(parsed_stream(stream))
+    # the stream emits the same declared record as the batch pipeline
+    assert [(f.name, f.dataType) for f in silver.schema] == [
+        (f.name, f.dataType) for f in EARTHQUAKE_TYPED
+    ]
     _run_stream_to_memory(silver, "silver_out", str(tmp_path / "ckpt"))
 
     rows = spark.sql("SELECT * FROM silver_out").collect()

@@ -22,9 +22,11 @@ from egal_yet_another_earthquake_project_spark.testing import fixtures
 
 def test_streaming_silver_to_es(spark, tmp_path: Path):
     events = fixtures.earthquake_events(n=40, bad_date_rate=0.0)
+    # an unparseable envelope has no eventID and must never be indexed
+    garbage = (None, bytearray(b"{broken json"), "earthquakeRaw", 0, 999, None, 0)
     src = tmp_path / "bronze"
     spark.createDataFrame(
-        fixtures.kafka_envelopes(events), KAFKA_ENVELOPE
+        fixtures.kafka_envelopes(events) + [garbage], KAFKA_ENVELOPE
     ).write.parquet(str(src))
 
     out_dir = tmp_path / "bulk"
@@ -56,7 +58,7 @@ def test_streaming_silver_to_es(spark, tmp_path: Path):
             else:
                 docs.append(rec)
     expected_ids = {e["eventID"] for e in events}
-    assert ids == expected_ids  # every event indexed exactly once per id
+    assert ids == expected_ids  # every event indexed once, no "None" id
     assert all(d["fault_line"] is not None for d in docs)
     assert {d["country"] for d in docs} == {"Türkiye"}
 
