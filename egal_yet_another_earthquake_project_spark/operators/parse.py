@@ -121,7 +121,7 @@ def quarantine_split(
     The split therefore parses with ``columnNameOfCorruptRecord``, which
     captures the offending text in a ``_corrupt`` field only when the
     parse failed; branching on it gives two frames off ONE shared parse
-    subplan:
+    subplan (one ``from_json`` per side's plan):
 
     * ok — the parsed ``EARTHQUAKE_RAW`` columns (same shape as
       :func:`parse_events_raw`);
@@ -141,14 +141,16 @@ def quarantine_split(
     with_corrupt = T.StructType(
         [*EARTHQUAKE_RAW.fields, T.StructField("_corrupt", T.StringType(), True)]
     )
-    parsed = df.withColumn(
-        "_e",
-        F.from_json(
-            F.col(json_col),
-            with_corrupt,
-            {"mode": "PERMISSIVE", "columnNameOfCorruptRecord": "_corrupt"},
-        ),
+    # The parse sits in a one-element ``explode`` for the reason given in
+    # :func:`parse_events_raw`: the ok/bad filters on ``_reason`` would
+    # otherwise each be pushed below the projection with their own copy
+    # of the ``from_json``.
+    parsed_doc = F.from_json(
+        F.col(json_col),
+        with_corrupt,
+        {"mode": "PERMISSIVE", "columnNameOfCorruptRecord": "_corrupt"},
     )
+    parsed = df.select(F.col(json_col), F.explode(F.array(parsed_doc)).alias("_e"))
     null_in = F.col(json_col).isNull() | (F.trim(F.col(json_col)) == "")
     parsed = parsed.withColumn(
         "_reason",

@@ -20,6 +20,17 @@ from pyspark.sql import SparkSession
 _DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
 
+def _default_driver_memory() -> str:
+    """Half the machine's physical memory, 1g to 48g. A heap larger than
+    the machine is never collected before it outgrows RAM: on a 16 GB
+    host a 48g heap grew past 13 GB of RSS and the JVM was killed."""
+    try:
+        total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (ValueError, OSError, AttributeError):
+        return "48g"
+    return f"{max(1, min(48, total // 2**31))}g"
+
+
 def get_spark(
     app_name: str = "egal-spark",
     master: str | None = None,
@@ -42,7 +53,8 @@ def get_spark(
         # (overridable; ignored with a warning if a JVM already exists).
         # On a real cluster the submitter sets executor/driver memory.
         .config(
-            "spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g")
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM", _default_driver_memory()),
         )
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.shuffle.partitions", str(cpus))

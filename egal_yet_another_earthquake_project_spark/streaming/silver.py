@@ -51,6 +51,14 @@ def dedup_stream(
     ``dropDuplicatesWithinWatermark`` keeps per-key state only until the
     watermark passes — bounded memory at any scale, unlike an unbounded
     ``dropDuplicates`` state store.
+
+    It keeps the FIRST copy of each key. An AFAD update re-send
+    (``isEventUpdate``, revised magnitude) that arrives in a later
+    micro-batch is therefore dropped and ES keeps the stale document,
+    while batch :func:`pipeline.bronze_to_silver` keeps the last update.
+    Re-emitting updates would post one ``_id`` more than once, which the
+    stream's exactly-once-per-``_id`` contract forbids; closing the gap
+    needs an update-aware state operator.
     """
     return silver.withWatermark(event_time, watermark).dropDuplicatesWithinWatermark(
         [key]

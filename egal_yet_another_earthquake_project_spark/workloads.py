@@ -93,12 +93,17 @@ def q_latest_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_numeric_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A3+P8: colStats parity — count/mean/sample-variance/stddev/min/max/sum
-    (/root/reference/sparktoELKstream.py:194-227) in one aggregate pass."""
+    (``sparktoELKstream.py:194-227``) in one aggregate pass.
+
+    Rounded as ``round(x·10⁴)/10⁴`` on the double, as the oracle's DuckDB
+    ``round(v, 4)`` does: ``F.round(x, 4)`` rounds the decimal string
+    HALF_UP, so a mean of 199.71325 (binary 199.713249999…) would give
+    199.7133 where DuckDB gives 199.7132."""
     out = stats.describe_numeric(_t(spark, sf_dir, "events"), ["value", "user_id"])
     return out.select(
         F.col("column").alias("col_name"),
         "statistic",
-        F.round("value", 4).alias("value"),
+        (F.round(F.col("value") * 10000) / 10000).alias("value"),
     )
 
 

@@ -9,6 +9,7 @@ strongly predicts a pass there.
 from __future__ import annotations
 
 import math
+import os
 
 import duckdb
 
@@ -19,7 +20,7 @@ _TABLES = (
 
 def run_oracle(sql: str, sf_dir: str) -> tuple[list[str], list[tuple]]:
     con = duckdb.connect()
-    for t in _TABLES:
+    for t in (t for t in _TABLES if os.path.exists(f"{sf_dir}/{t}.parquet")):
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
         )

@@ -171,6 +171,9 @@ def test_quarantine_split_routes_malformed_payloads(spark):
     ]
     df = spark.createDataFrame(rows, "ascii_value string")
     ok, bad = quarantine_split(df)
+    for side in (ok, bad):  # each side parses every payload once
+        plan = side._jdf.queryExecution().optimizedPlan().toString()
+        assert plan.count("from_json") == 1, plan
     assert sorted(r.eventID for r in ok.collect()) == ["1", "2"]
     got = {(r.payload, r.reason) for r in bad.collect()}
     assert got == {

@@ -162,34 +162,69 @@ def test_trailing_view_keeps_recent_only(spark):
     assert got == {1, 2}
 
 
-def test_es_sink_executor_side_bulk(spark, tmp_path: Path):
-    """S5: bulk actions are produced per partition with _id=eventID and no
-    driver collect; transport is injected and captured to files (works in
-    local mode where executors share the filesystem)."""
-    out_dir = tmp_path / "bulk"
-    out_dir.mkdir()
+def test_es_sink_bulk_lines_match_row_rendering(spark, monkeypatch):
+    """S5: every row becomes one index action (_id=eventID) plus its
+    document, rendered in the JVM exactly as ``json.dumps`` of the row
+    dict renders it (timestamps, nulls, booleans, non-ASCII names), in
+    one Spark job; the driver posts them in requests of BULK_DOCS docs."""
+    import math
 
-    def file_transport(url: str, payload: str) -> None:
-        import os
-        import uuid
+    from egal_yet_another_earthquake_project_spark import pipeline
+    from egal_yet_another_earthquake_project_spark.sinks import elasticsearch
+    from egal_yet_another_earthquake_project_spark.testing import fixtures
 
-        p = out_dir / f"{os.getpid()}-{uuid.uuid4().hex}.ndjson"
-        p.write_text(payload)
+    posts: list[str] = []
+
+    def capture(url: str, payload: str) -> None:
+        assert url == "http://localhost:9200/_bulk"
+        posts.append(payload)
+
+    def posted_lines() -> list[dict]:
+        return [json.loads(line) for p in posts for line in p.splitlines() if line]
 
     df = spark.createDataFrame(
         [(1, "a", 5.0), (2, "b", 6.0), (3, "c", 7.0)],
         "eventID long, province string, magnitude double",
     ).repartition(2)
-    write_to_es(df, "earthquake-all", id_col="eventID", transport=file_transport)
+    write_to_es(df, "earthquake-all", id_col="eventID", transport=capture)
 
-    lines = []
-    for f in out_dir.glob("*.ndjson"):
-        lines += [json.loads(line) for line in f.read_text().splitlines() if line]
+    lines = posted_lines()
     metas = [line for line in lines if "index" in line and "_index" in line.get("index", {})]
     docs = [line for line in lines if "eventID" in line]
     assert {m["index"]["_id"] for m in metas} == {"1", "2", "3"}
     assert {m["index"]["_index"] for m in metas} == {"earthquake-all"}
     assert {d["province"] for d in docs} == {"a", "b", "c"}
+
+    env = spark.createDataFrame(
+        fixtures.kafka_envelopes(fixtures.earthquake_events(n=300)), KAFKA_ENVELOPE
+    )
+    silver = pipeline.bronze_to_silver(env).cache()
+    want = {
+        str(row.eventID): json.loads(json.dumps(row.asDict(recursive=True), default=str))
+        for row in silver.collect()
+    }
+    assert any(d["neighborhood"] is None for d in want.values())
+    assert any(d["isEventUpdate"] is True for d in want.values())
+    assert any(d["lastUpdateDate"] is not None for d in want.values())
+    assert all(not d["country"].isascii() for d in want.values())
+    posts.clear()
+    monkeypatch.setattr(elasticsearch, "BULK_DOCS", 100)
+    sc = spark.sparkContext
+    sc.setJobGroup("es-sink-contract", "write_to_es")
+    try:
+        write_to_es(silver, "earthquake-all", transport=capture)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    silver.unpersist()
+
+    assert len(sc.statusTracker().getJobIdsForGroup("es-sink-contract")) == 1
+    assert len(posts) == math.ceil(len(want) / 100)
+    lines = posted_lines()
+    actions, got = lines[0::2], lines[1::2]
+    assert [a["index"]["_id"] for a in actions] == [str(d["eventID"]) for d in got]
+    assert {a["index"]["_index"] for a in actions} == {"earthquake-all"}
+    assert {str(d["eventID"]): d for d in got} == want
+    assert len(got) == len(want)
 
 
 def test_es_sink_idempotent_replay(spark, tmp_path: Path):
